@@ -30,11 +30,12 @@ Scale design — the paper's own decomposition, made Spark-first:
   regex performs. The identical fold runs in DuckDB's
   ``list_reduce``, so the whole training loop is FULL-oracle
   replayable as an iterated CTE chain (see queries.py).
-- Encoding applies the learned merges in rank order as ONE composed
-  column expression (merge k can only create symbols from merges
-  < k, so sequential rank-order application equals the
-  priority-queue encode) — zero extra jobs, zero driver state at
-  encode time.
+- Encoding is a lookup, not a re-fold: the learner's final
+  vocabulary relation (w, c, syms) IS the encode table, and
+  ``bpe_token_counts`` joins each document's words against it
+  (broadcast, vocabulary-bound). The merge folds run once per
+  DISTINCT word while learning, never per occurrence, so encoding
+  costs one join and no driver state.
 
 Deltas from the paper, pinned for oracle determinism: no ``</w>``
 end-of-word marker (the engine's tokenizer already separates words;
@@ -45,8 +46,6 @@ engines — instead of Python dict order.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,7 +54,6 @@ from ..functions.text import normalize, tokenize
 __all__ = [
     "bpe_word_counts",
     "bpe_learn",
-    "apply_merges",
     "bpe_token_counts",
 ]
 
@@ -81,8 +79,8 @@ BPE_LOCAL_WORDS_CAP = 2_000_000
 # Σ length(w) alongside the row count for free; the local path now
 # requires BOTH. 16 M symbols ≈ 1-1.5 GB worst-case of driver heap —
 # roomy for any natural-language vocabulary at the row cap (~8 chars/
-# word average) while refusing the pathological shape. Env
-# ``SPARK_GRAFT_BPE_LOCAL_ELEMS``; 0 disables the element gate.
+# word average) while refusing the pathological shape. 0 disables the
+# element gate.
 BPE_LOCAL_ELEMS_CAP = 16_000_000
 
 
@@ -161,20 +159,6 @@ def _fold_merge(syms: Column, left: str, right: str) -> Column:
     return F.split(folded, " ")
 
 
-def apply_merges(
-    syms: Column, merges: list[tuple[str, str]]
-) -> Column:
-    """BPE-encode a symbol array with a learned merge list: apply
-    each merge in rank order as one composed expression. Equivalent
-    to the priority-queue encode — merge k's output symbol cannot
-    appear before step k, so earlier merges are never re-enabled by
-    later ones — with zero extra jobs."""
-    out = syms
-    for left, right in merges:
-        out = _fold_merge(out, left, right)
-    return out
-
-
 def bpe_learn(
     docs: DataFrame,
     n_merges: int = 16,
@@ -194,10 +178,10 @@ def bpe_learn(
 
     Eager-action note (the _guard_lsh_verify convention): building
     runs driver actions at call time. Below ``BPE_LOCAL_WORDS_CAP``
-    distinct words (env ``SPARK_GRAFT_BPE_LOCAL_WORDS``; the 100 TB
-    path is the distributed loop) the loop runs on the driver over
-    the collected vocabulary — 2 bounded jobs total (count + collect)
-    instead of one argmax job per merge, bit-identical output (see
+    distinct words (the 100 TB path is the distributed loop) the
+    loop runs on the driver over the collected vocabulary — 2
+    bounded jobs total (count + collect) instead of one argmax job
+    per merge, bit-identical output (see
     ``_local_bpe_learn``). On the distributed path this runs
     ``n_merges`` single-row argmax collects; the word-relation
     checkpoints are LAZY (r17 optimization, guide §1.2 "remove
@@ -210,12 +194,7 @@ def bpe_learn(
     path only, the guarded vocabulary block)."""
     spark = docs.sparkSession
     words = bpe_word_counts(docs, text_col=text_col).localCheckpoint(eager=False)
-    cap = int(
-        os.environ.get("SPARK_GRAFT_BPE_LOCAL_WORDS", str(BPE_LOCAL_WORDS_CAP))
-    )
-    elems_cap = int(
-        os.environ.get("SPARK_GRAFT_BPE_LOCAL_ELEMS", str(BPE_LOCAL_ELEMS_CAP))
-    )
+    cap, elems_cap = BPE_LOCAL_WORDS_CAP, BPE_LOCAL_ELEMS_CAP
     # the sizing aggregate materializes the lazy checkpoint, so the
     # collect below (and, on the distributed path, the first argmax)
     # reads blocks; Σ length(w) rides the same job as the row count

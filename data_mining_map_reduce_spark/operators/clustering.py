@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2
+from ._local import bounded_rows
 
 
 def assign_clusters(
@@ -65,8 +66,8 @@ def assign_clusters(
 # Above the cap — the 100 TB shape, where a scan is ~800 k partitions
 # and the collected partials would be GBs — the groupBy reduce runs
 # unchanged. Driver state on the local-reduce path is <= cap * k
-# rows (~17 MB of doubles at the default, k=8, d=64). Env-overridable;
-# 0 disables the driver reduce.
+# rows (~17 MB of doubles at the default, k=8, d=64). 0 disables the
+# driver reduce.
 KMEANS_DRIVER_REDUCE_PARTS = 4096
 
 
@@ -313,9 +314,8 @@ def kmeans(
     # since only vec_col is kept).
     loop_pts = points.select(vec_col).persist()
     # The init collect doubles as the emptiness probe and the
-    # dimensionality probe (r17: the separate first() job, and — when
-    # the bounded window wasn't full — the count() job, were one full
-    # upstream execution each for callers whose points lineage is
+    # dimensionality probe (r17: the separate first() job was one full
+    # upstream execution for callers whose points lineage is
     # non-trivial; guide §1.2, don't compute things twice).
     init_limit = max(init_cap, k)
     init_rows = (
@@ -330,9 +330,6 @@ def kmeans(
         loop_pts.unpersist()
         raise ValueError("kmeans on empty DataFrame")
     dim = len(init_rows[0][0])
-    # a non-full window means we saw EVERY row (must be read before
-    # the distinct fallback below swaps init_rows for distinct rows)
-    known_n = len(init_rows) if len(init_rows) < init_limit else None
     if len({tuple(r[0]) for r in init_rows}) < k:
         # The hash-smallest window can be swamped by duplicates of a
         # few hot vectors even when the full data has >= k distinct
@@ -345,7 +342,7 @@ def kmeans(
                 "_h", F.xxhash64(F.col(vec_col).cast("array<string>"), F.lit(seed))
             )
             .orderBy("_h")
-            .limit(max(init_cap, k))
+            .limit(init_limit)
             .collect()
         )
         if len({tuple(r[0]) for r in init_rows}) < k:
@@ -364,37 +361,21 @@ def kmeans(
         centroids = seen
 
     path = "distributed"
-    # count() only when a local cap is in play — with local_elems_cap=0
-    # the distributed path needs no row count, so don't pay the job
-    # (ADVICE r7). `and` short-circuits before the count. When the
-    # bounded init window came back non-full, its length IS the row
-    # count — no count job at all (r17).
-    n_rows = (
-        known_n
-        if known_n is not None
-        else (loop_pts.count() if local_elems_cap else 0)
-    )
-    if local_elems_cap and n_rows * dim <= local_elems_cap:
+    rows = bounded_rows(loop_pts, local_elems_cap // max(dim, 1))
+    if rows is not None:
         import numpy as np
 
         path = "local"
-        X = np.array([r[0] for r in loop_pts.collect()], dtype=float)
+        X = np.array([r[0] for r in rows], dtype=float)
         centroids, iterations = _local_lloyd(X, centroids, k, max_iter, tol)
     else:
-        import os
-
         # partition-bounded driver reduce for the per-iteration means
         # (see KMEANS_DRIVER_REDUCE_PARTS): one job per Lloyd round
         # instead of an AQE-split shuffle + collect; the 100 TB shape
         # (scan partitions above the cap) keeps the groupBy reduce
-        reduce_cap = int(
-            os.environ.get(
-                "SPARK_GRAFT_KMEANS_REDUCE_PARTS",
-                str(KMEANS_DRIVER_REDUCE_PARTS),
-            )
-        )
         driver_reduce = (
-            reduce_cap > 0 and loop_pts.rdd.getNumPartitions() <= reduce_cap
+            KMEANS_DRIVER_REDUCE_PARTS > 0
+            and loop_pts.rdd.getNumPartitions() <= KMEANS_DRIVER_REDUCE_PARTS
         )
         iterations = 0
         for _ in range(max_iter):

@@ -20,7 +20,7 @@ Scale notes per operator:
   locally assembled adjacency dict. This matches the reference's
   operating envelope (A4 graphs: thousands of vertices) and documents
   its memory bound: adjacency must fit one task. Beyond that, use
-  sampled-root approximate betweenness (same code, roots=sample).
+  sampled-root approximate betweenness (same code, ``n_roots``).
 """
 
 from __future__ import annotations
@@ -31,6 +31,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._local import bounded_rows
 
 
 def canonical_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -164,13 +166,9 @@ def connected_components(
     # Jaccard self-join, which once dominated this loop's wall time).
     sym = symmetric_edges(edges).localCheckpoint(eager=True)
     id_type = dict(sym.dtypes)["src"]
-    if local_cap > 0:
-        # limit(cap+1) bounds the probe itself: on a huge graph this
-        # reads one partition's first rows, never the full edge list,
-        # and doubles as the collect when the graph fits the cap.
-        rows = sym.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            return _local_min_label_components(rows, id_type, edges.sparkSession)
+    rows = bounded_rows(sym, local_cap)
+    if rows is not None:
+        return _local_min_label_components(rows, id_type, edges.sparkSession)
     # Lazy checkpoints throughout the loop: the convergence-probe agg
     # is the ONLY action per round, and materializing the checkpoint
     # inside that job halves the per-round job count (round overhead,
@@ -279,13 +277,10 @@ def label_propagation(
     # caller's action), so materializing inside that consuming job
     # halves the loop's job count without recomputation.
     sym = symmetric_edges(edges).localCheckpoint(eager=True)
-    if local_cap > 0:
-        rows = sym.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            id_type = dict(sym.dtypes)["src"]
-            return _local_label_propagation(
-                rows, max_iter, id_type, edges.sparkSession
-            )
+    rows = bounded_rows(sym, local_cap)
+    if rows is not None:
+        id_type = dict(sym.dtypes)["src"]
+        return _local_label_propagation(rows, max_iter, id_type, edges.sparkSession)
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -356,9 +351,7 @@ def grouped_adjacency(edges: DataFrame) -> DataFrame:
 
 def edge_betweenness(
     edges: DataFrame,
-    sample_fraction: float | None = None,
     seed: int = 7,
-    num_batches: int | None = None,
     adjacency: DataFrame | None = None,
     local_cap: int = 500,
     n_roots: int | None = None,
@@ -369,7 +362,7 @@ def edge_betweenness(
     Scale design: the adjacency list is built DISTRIBUTED
     (symmetrize → groupBy(id) → sorted collect_list — one shuffle)
     and never touches the driver. Roots are hashed into
-    ``num_batches`` batches; the per-vertex adjacency rows are
+    ``defaultParallelism`` batches; the per-vertex adjacency rows are
     replicated once per batch (explode over the batch range — an
     executor-to-executor shuffle, the distributed equivalent of a
     broadcast fan-out), and ``groupBy(batch).applyInPandas``
@@ -382,9 +375,6 @@ def edge_betweenness(
     count only, not quadratic-family (the r12 sf10 receipt measured
     the fractional knob at 9.2x/decade because |roots| grew with V;
     a fixed k makes the sampled tier genuinely sublinear in V).
-    ``sample_fraction`` (the legacy knob) keeps fraction semantics:
-    |roots| = f.V, O(f.V.E) work — still quadratic-family, retained
-    for parity tests and callers that want proportional accuracy.
     Credits sum distributed and halve (each shortest path is seen
     from both endpoint roots).
 
@@ -408,27 +398,20 @@ def edge_betweenness(
     if adjacency is not None:
         adj_df = adjacency
     else:
-        # Materialize once: the sampled path reads the adjacency from
-        # THREE subtrees (root count, sampled-root count, the batch
-        # fan-out) and the upstream edge build is typically the most
-        # expensive part of the whole query (a co-occurrence
-        # self-join) — without this the lineage re-executes per read.
+        # Materialize once: the probe, the root count and the batch
+        # fan-out each read the adjacency, and the upstream edge build
+        # is typically the most expensive part of the whole query (a
+        # co-occurrence self-join) — without this the lineage
+        # re-executes per read.
         adj_df = grouped_adjacency(edges).localCheckpoint(eager=True)
 
     if n_roots is not None and n_roots < 1:
         raise ValueError(f"n_roots must be >= 1, got {n_roots}")
-    # Local fast-path probe FIRST (r18): limit(cap+1) bounds the probe
-    # itself — on a huge graph this reads one partition's first rows,
-    # never the full adjacency — and when the graph fits, the
+    # Local fast-path probe FIRST (r18): when the graph fits, the
     # collected head doubles as (a) the vertex count the sampling
-    # logic needs (the old roots.count() job re-read the checkpoint
-    # for a number the driver already held) and (b) the unsampled
-    # root set (the old roots.collect() job, same partition order).
-    head = None
-    if local_cap > 0:
-        head = adj_df.limit(local_cap + 1).collect()
-        if len(head) > local_cap:
-            head = None
+    # logic needs and (b) the unsampled root set — no count() or
+    # roots.collect() job re-reads the checkpoint.
+    head = bounded_rows(adj_df, local_cap)
 
     # Symmetrized adjacency contains every non-isolated vertex as a
     # key, so its id set IS the vertex set — no second edge scan.
@@ -448,23 +431,12 @@ def edge_betweenness(
             ).limit(n_roots)
             scale = n_total / n_roots
             root_ids = None  # genuinely sampled — collected below
-    elif sample_fraction is not None and sample_fraction < 1.0:
-        # legacy fraction knob: Spark-side sampling kept verbatim (the
-        # seeded .sample draw is not reproducible on the driver)
-        n_total = roots.count()
-        roots = roots.sample(fraction=sample_fraction, seed=seed)
-        n_sampled = roots.count()
-        if n_sampled == 0:
-            roots = adj_df.select("id").limit(1)
-            n_sampled = 1
-        scale = n_total / n_sampled
-        root_ids = None
 
     id_type = dict(edges.select("src", "dst").dtypes)["src"]
     if head is not None:
         a = {r["id"]: list(r["nbrs"]) for r in head}
         if root_ids is None:
-            # the Spark-sampled root set (same rows on either path) is
+            # the sampled root set (same rows on either path) is
             # bounded by the vertex cap
             root_ids = [r["id"] for r in roots.collect()]
         credits: dict[tuple, float] = {}
@@ -478,7 +450,7 @@ def edge_betweenness(
             rows, f"src {id_type}, dst {id_type}, betweenness double"
         )
 
-    n_batches = num_batches or spark.sparkContext.defaultParallelism
+    n_batches = spark.sparkContext.defaultParallelism
     adj_rep = adj_df.select(
         F.explode(F.sequence(F.lit(0), F.lit(n_batches - 1))).alias("_batch"),
         "id",
@@ -725,17 +697,16 @@ def girvan_newman(
     """
     rebase_every = 10
     current = canonical_edges(edges).localCheckpoint(eager=True)
-    if local_cap > 0:
-        rows = current.limit(local_cap + 1).collect()
-        if len(rows) <= local_cap:
-            id_type = dict(current.dtypes)["src"]
-            return _local_girvan_newman(
-                [(r[0], r[1]) for r in rows],
-                max_removals,
-                q_drop_stop,
-                edges.sparkSession,
-                id_type,
-            )
+    rows = bounded_rows(current, local_cap)
+    if rows is not None:
+        id_type = dict(current.dtypes)["src"]
+        return _local_girvan_newman(
+            [(r[0], r[1]) for r in rows],
+            max_removals,
+            q_drop_stop,
+            edges.sparkSession,
+            id_type,
+        )
     original = current
     n_edges = current.count()
     deg = degrees(original).localCheckpoint(eager=True)

@@ -1649,7 +1649,7 @@ def graph_betweenness_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # G3 at-scale escape hatch: sampled-roots betweenness (rows-only;
 # tolerance vs the exact path asserted in
-# tests/test_graph.py::test_betweenness_sampled_roots_approximates).
+# tests/test_graph.py::test_betweenness_fixed_roots_approximates).
 # At 100x the vertex count the exact O(V·E) Brandes sweep is the
 # bottleneck; BFS from a FIXED count of seeded roots rescaled by V/k
 # is the documented scale path — this query keeps it exercised at
@@ -2490,8 +2490,8 @@ def _corpus_funnel_impl(
 ) -> DataFrame:
     # ``docs`` (r15): the funnel over an injected document set instead
     # of the full table — the subsample-then-curate composition
-    # (scripts/probe_subsample_curate.py measures it at sf10). The
-    # None default only pins WHICH relation feeds the funnel (the
+    # (measured at sf10 by scripts/probe_subsample_curate.py, which
+    # lives at commit 7c00623). The None default only pins WHICH relation feeds the funnel (the
     # loaded table, as before); the registered plans themselves DID
     # change in r15 — the exact-dup verdict pin below replaces the
     # groupBy subtree with an ExistingRDD in both funnel rows (both
@@ -2633,9 +2633,10 @@ def _corpus_funnel_impl(
     if survivors:
         # Composition exit (r16, verdict task 7): the doc_ids that
         # survive EVERY stage, for chaining the funnel into a
-        # downstream operator (subsample -> funnel -> DSIR-resample,
-        # scripts/probe_chain_sf10.py). Default False — both
-        # registered funnel rows keep their stage-count plans.
+        # downstream operator (subsample -> funnel -> DSIR-resample;
+        # scripts/probe_chain_sf10.py at commit 7c00623). Default
+        # False — both registered funnel rows keep their stage-count
+        # plans.
         return flags.where(conds[-1]).select("doc_id")
 
     def _cnt(cond):
@@ -6294,167 +6295,148 @@ def winnow_candidate_docs(
 # round_open.sh), which hard-fails once the newest artifact round
 # reaches _WINDOW_ROUND until the window is rebalanced and this pin
 # bumped — so the pin cannot silently go stale either.
-_WINDOW_ROUND = 17
+_WINDOW_ROUND = 18
 
 _DRIVER_ORDER = [
-    # -- the 22 obligated leads: r14-green rows at the staleness limit
-    #    (age 2 at r16 close; scripts/make_driver_order.py computes
-    #    the same set mechanically) --
-    "flagship_category_avg",
-    "fpgrowth_itemsets",
-    "gn_quality_check",
-    "graph_betweenness_sampled",
-    "graph_betweenness_top",
+    # -- the 25 obligated leads: r15-green rows past the staleness
+    #    limit at r18 close (registry_window.must_rotate for r18) --
+    "customers_in_both_statuses",
+    "customers_never_final",
+    "doc_repetition_scores",
+    "embedding_pair_distances",
+    "event_props_extract",
+    "event_rollup_multigrain",
+    "fm_distinct_users",
+    "frequent_items",
+    "frequent_pairs",
+    "girvan_newman_communities",
+    "graph_degree_distribution",
+    "graph_triangle_count",
+    "join_filter_brand_counts",
+    "kmeans_wcss_check",
+    "kmv_distinct_users",
+    "largest_baskets",
+    "media_feature_rollup",
+    "media_frame_sample",
+    "order_item_lists",
+    "partition_layout_stats",
+    "pivot_status_by_priority",
+    "reservoir_sample_events",
+    "revenue_cube",
+    "rollup_revenue",
+    "session_windows_per_user",
+    # -- r18-cohort amortization picks (keep that cohort's outside
+    #    count at the AMORTIZE_OUTSIDE_MAX=44 bound), chosen among the
+    #    rows whose operator code changed: the bounded local-path
+    #    probe (CC, LPA, betweenness, k-means) and the removed env
+    #    overrides (BPE, FPGrowth) --
     "graph_components",
     "graph_lpa_community_sizes",
-    "jaccard_pairs_exact",
+    "graph_betweenness_sampled",
     "kmeans_cluster_sizes",
-    "kmeans_cluster_sizes_dist",
-    "language_id_docs",
-    "near_dup_docs_exact",
-    "priority_token_counts",
-    "simhash_doc_pairs",
-    "son_itemsets",
-    "source_token_kl",
-    "stratified_doc_sample",
-    "token_counts_docs",
-    "top_customers_per_segment",
-    "train_test_split_counts",
-    "union_filtered_event_counts",
-    "window_heavy_hitter_users",
-    # -- changed-code r16-green rows (re-grade this round's fixes):
-    #    domain_mixture_weights re-grades the try_divide zero-token
-    #    guard (r16 ADVICE item 1); packed_sequence_stats re-grades
-    #    the eager localCheckpoint partition pin (item 2);
-    #    media_phash_pairs re-grades the per-id NULL-payload sentinel
-    #    (item 3) + the shared probe-media builder refactor;
-    #    corpus_curation_funnel_semantic re-grades the funnel's
-    #    conds[-1] chaining refactor (identity when quality_model is
-    #    None, but the code path changed) --
-    "domain_mixture_weights",
-    "packed_sequence_stats",
-    "media_phash_pairs",
-    "corpus_curation_funnel_semantic",
-    # -- r17 debuts (a never-rowed query must be in-window its first
-    #    round): the completed BPE chain (X37 merge loop + encoder +
-    #    the X34 packing twin on learned-tokenizer counts — all three
-    #    FULL oracles via the iterated list_reduce CTE chain) --
     "bpe_learned_merges",
-    "bpe_token_counts",
-    "packed_sequence_stats_bpe",
-    # -- r17 debuts: the consolidated rows (verdict task 8 — same
-    #    operator evidence, fewer rows; both FULL oracles) --
-    "basic_count_stats",
-    "window_distinct_users",
-    # -- r17 debut: the funnel with the X36 model-based quality stage
-    #    (rows-only by nature — iterative L-BFGS; stage counts pinned
-    #    at sf0.01 by pytest) --
-    "corpus_curation_funnel_modelq",
-    # -- r17 debut: X38 completion — canonical media dedup (rows-only
-    #    by nature — the image decoder is not SQL-expressible;
-    #    planted-cluster + tie-rule pytests) --
-    "media_dedup_canonical",
-    # -- oldest-first fill: r15-green rows (age 2 at r17 close) --
-    "ann_recall_check",
-    "ann_topk_exact",
-    "ann_topk_ivf",
-    "asof_last_purchase",
-    "avg_price_by_priority",
-    "betweenness_mass_check",
-    "bloom_probe_custkeys",
-    "cf_item_similarities",
-    "cf_predictions",
-    "cf_user_predictions",
-    "cf_user_predictions_lsh",
-    "content_based_scores",
-    "cooccurrence_pairs",
-    "cooccurrence_pairs_lsh",
-    "corr_qty_price_by_flag",
-    # -- r16-cohort amortization picks (keep that cohort's outside
-    #    count at the AMORTIZE_OUTSIDE_MAX=44 bound) --
-    "window_tumbling_hourly",
-    "window_sliding_hourly",
+    "fpgrowth_itemsets",
+    # -- changed-code r16-green rows: k-means via BFR and IVF-PQ,
+    #    connected_components via the dedup pipelines --
+    "bfr_round_stats",
+    "ann_topk_ivfpq",
+    "dedup_canonical_docs",
+    "dedup_canonical_docs_lsh",
+    "dedup_keep_best_docs",
+    "corpus_curation_funnel",
+    "corpus_curation_funnel_lsh",
+    "semantic_dedup_docs",
+    # -- oldest-first fill: r16-green rows --
+    "ann_topk_lsh",
+    "approx_distinct_users",
+    "baskets_by_customer",
+    "bpe_pair_counts",
+    "cm_heavy_hitter_partkeys",
+    "contamination_ngram_overlap",
+    "decontaminated_corpus_stats",
+    "dict_encode_brands",
+    "dict_encode_partkeys_big",
+    "doc_dsir_weights",
+    "doc_fingerprint_stats",
     # ---- driver cap (50) falls here ----
 ]
 
-# Queries excluded from the r17 driver window: 25 r15-green rows and
-# 44 r16-green rows (ages 2 and 1 at r17 close — both inside the
-# staleness invariant; the r15 residue is obligated first in the r18
-# window by make_driver_order, and the r16 cohort sits exactly at the
+# Queries excluded from the r18 driver window: 23 r16-green rows and
+# 44 r18-green rows (the r18 cohort sits exactly at the
 # AMORTIZE_OUTSIDE_MAX=44 bound). Rows whose SOURCE module changed
-# this round without an in-window slot carry a per-row note naming
-# the in-window query + pytest that grades the changed code path.
-_EXCLUDED_R17 = [
+# without an in-window slot carry a per-row note naming the in-window
+# query or pytest that grades the changed code path.
+_EXCLUDED_R18 = [
     # name                      last green driver row
-    ("customers_in_both_statuses", "r15"),
-    ("customers_never_final", "r15"),
-    ("doc_repetition_scores", "r15"),
-    ("embedding_pair_distances", "r15"),
-    ("event_props_extract", "r15"),
-    ("event_rollup_multigrain", "r15"),
-    ("fm_distinct_users", "r15; sketches.py untouched this round — the FM family is graded in-window by window_distinct_users (debut), whose oracle replays the identical per-window FM estimator"),
-    ("frequent_items", "r15"),
-    ("frequent_pairs", "r15"),
-    ("girvan_newman_communities", "r15"),
-    ("graph_degree_distribution", "r15"),
-    ("graph_triangle_count", "r15"),
-    ("join_filter_brand_counts", "r15"),
-    ("kmeans_wcss_check", "r15"),
-    ("kmv_distinct_users", "r15"),
-    ("largest_baskets", "r15"),
-    ("media_feature_rollup", "r15; the r17 multimodal.py change (NULL-payload sentinel + media_dedup_canonical) is phash-path only — extract_features untouched; graded in-window by media_phash_pairs + media_dedup_canonical"),
-    ("media_frame_sample", "r15; same note as media_feature_rollup"),
-    ("order_item_lists", "r15"),
-    ("partition_layout_stats", "r15"),
-    ("pivot_status_by_priority", "r15"),
-    ("reservoir_sample_events", "r15"),
-    ("revenue_cube", "r15"),
-    ("rollup_revenue", "r15"),
-    ("session_windows_per_user", "r15"),
-    ("sketch_error_check", "r16"),
-    ("solo_flagship_parity", "r16"),
-    ("source_mix_stats", "r16"),
-    ("suffstats_by_label", "r16"),
-    ("tfidf_top_terms", "r16; text_analysis.py's r17 change is the domain_mixture_weights try_divide guard — no shared helper touched; graded in-window by domain_mixture_weights"),
-    ("top_users_by_orders", "r16"),
-    ("weighted_doc_sample", "r16"),
-    ("word_count_top20", "r16"),
-    ("minhash_lsh_pairs", "r16"),
-    ("near_dup_docs_lsh", "r16"),
-    ("dedup_canonical_docs_lsh", "r16"),
-    ("corpus_curation_funnel_lsh", "r16; the r17 _corpus_funnel_impl change adds the quality_model= branch behind a None default and rewrites the semantic chain to conds[-1] (== k4 when both are None — same expression object, plan unchanged); the changed paths are graded in-window by corpus_curation_funnel_modelq (debut) and corpus_curation_funnel_semantic, plus the first-five-stage identity pytests"),
-    ("semantic_dedup_docs", "r16"),
-    ("doc_dsir_weights", "r16"),
-    ("pii_scan_stats", "r16"),
-    ("dsir_resampled_docs", "r16"),
-    ("decontaminated_corpus_stats", "r16"),
-    ("quality_filter_stats", "r16; quality_model.py's r17 change is docstring-only (eager-action note); the module is also graded in-window by corpus_curation_funnel_modelq (debut), which runs the same classifier + keep rule"),
-    ("bpe_pair_counts", "r16; text_analysis.py change is the try_divide guard (see tfidf_top_terms note); the BPE family is graded in-window by the three bpe_* debuts"),
-    ("dedup_keep_best_docs", "r16"),
-    ("corpus_curation_funnel", "r16; same note as corpus_curation_funnel_lsh"),
-    ("pii_redact_stats", "r16"),
-    ("contamination_ngram_overlap", "r16"),
-    ("ann_topk_ivfpq", "r16"),
-    ("ann_topk_lsh", "r16"),
-    ("approx_distinct_users", "r16"),
-    ("baskets_by_customer", "r16"),
-    ("bfr_round_stats", "r16"),
-    ("cm_heavy_hitter_partkeys", "r16"),
-    ("dedup_canonical_docs", "r16"),
-    ("dict_encode_brands", "r16"),
-    ("dict_encode_partkeys_big", "r16"),
-    ("doc_fingerprint_stats", "r16"),
     ("doc_length_percentiles", "r16"),
     ("doc_length_percentiles_approx", "r16"),
     ("doc_lm_perplexity", "r16"),
     ("doc_quality_stats", "r16"),
+    ("dsir_resampled_docs", "r16"),
     ("duplicate_ngram_spans", "r16"),
     ("duplicate_ngram_spans_winnowed", "r16"),
     ("event_value_tier_counts", "r16"),
     ("exact_dup_doc_groups", "r16"),
     ("fingerprint_overlap_pairs", "r16"),
+    ("minhash_lsh_pairs", "r16"),
+    ("near_dup_docs_lsh", "r16"),
+    ("pii_redact_stats", "r16"),
+    ("pii_scan_stats", "r16"),
+    ("quality_filter_stats", "r16"),
+    ("sketch_error_check", "r16"),
+    ("solo_flagship_parity", "r16"),
+    ("source_mix_stats", "r16"),
+    ("suffstats_by_label", "r16"),
+    ("tfidf_top_terms", "r16"),
+    ("top_users_by_orders", "r16"),
+    ("weighted_doc_sample", "r16"),
+    ("word_count_top20", "r16"),
+    ("ann_recall_check", "r18; same note as ann_topk_ivf"),
+    ("ann_topk_exact", "r18"),
+    ("ann_topk_ivf", "r18; IVF trains its quantizer through kmeans; graded in-window by ann_topk_ivfpq and kmeans_cluster_sizes"),
+    ("asof_last_purchase", "r18"),
+    ("avg_price_by_priority", "r18"),
+    ("basic_count_stats", "r18"),
+    ("betweenness_mass_check", "r18; same note as graph_betweenness_top"),
+    ("bloom_probe_custkeys", "r18"),
+    ("bpe_token_counts", "r18; bpe_learn lost its env overrides only; graded in-window by bpe_learned_merges and tests/test_bpe.py::test_bpe_local_distributed_parity"),
+    ("cf_item_similarities", "r18"),
+    ("cf_predictions", "r18"),
+    ("cf_user_predictions", "r18"),
+    ("cf_user_predictions_lsh", "r18"),
+    ("content_based_scores", "r18"),
+    ("cooccurrence_pairs", "r18"),
+    ("cooccurrence_pairs_lsh", "r18; connected_components' local probe moved to bounded_rows; graded in-window by graph_components and the dedup_canonical_docs rows"),
+    ("corpus_curation_funnel_modelq", "r18; graded in-window by corpus_curation_funnel / _lsh"),
+    ("corpus_curation_funnel_semantic", "r18; same note as corpus_curation_funnel_modelq"),
+    ("corr_qty_price_by_flag", "r18"),
+    ("domain_mixture_weights", "r18"),
+    ("flagship_category_avg", "r18"),
+    ("gn_quality_check", "r18; girvan_newman's local probe moved to bounded_rows; graded in-window by girvan_newman_communities and tests/test_graph.py::test_girvan_newman_local_matches_distributed"),
+    ("graph_betweenness_top", "r18; the exact default path of edge_betweenness (probe now via operators/_local.bounded_rows); graded in-window by graph_betweenness_sampled (same local probe + root sampling) and tests/test_graph.py::test_betweenness_local_matches_batched"),
+    ("jaccard_pairs_exact", "r18"),
+    ("kmeans_cluster_sizes_dist", "r18; local_elems_cap=0 runs no probe job; the driver-reduce constant is no longer env-overridable; graded by tests/test_clustering.py::test_kmeans_driver_reduce_matches_groupby"),
+    ("language_id_docs", "r18"),
+    ("media_dedup_canonical", "r18"),
+    ("media_phash_pairs", "r18"),
+    ("near_dup_docs_exact", "r18"),
+    ("packed_sequence_stats", "r18"),
+    ("packed_sequence_stats_bpe", "r18; same note as bpe_token_counts"),
+    ("priority_token_counts", "r18"),
+    ("simhash_doc_pairs", "r18"),
+    ("son_itemsets", "r18"),
+    ("source_token_kl", "r18"),
+    ("stratified_doc_sample", "r18"),
+    ("token_counts_docs", "r18"),
+    ("top_customers_per_segment", "r18"),
+    ("train_test_split_counts", "r18"),
+    ("union_filtered_event_counts", "r18"),
+    ("window_distinct_users", "r18"),
+    ("window_heavy_hitter_users", "r18"),
+    ("window_sliding_hourly", "r18"),
+    ("window_tumbling_hourly", "r18"),
 ]
-_DRIVER_ORDER += [name for name, _ in _EXCLUDED_R17]
+_DRIVER_ORDER += [name for name, _ in _EXCLUDED_R18]
 
 
 _V = TypeVar("_V")

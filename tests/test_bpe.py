@@ -1,7 +1,7 @@
-"""X37 complete: BPE learn / encode / token counts vs a pure-Python
-Sennrich reference (arXiv:1508.07909 §3.2 — get_stats + merge_vocab
-with the engine's deterministic tie-break), plus encode==learn
-consistency and the downstream token-count contract.
+"""X37 complete: BPE learn / token counts vs a pure-Python Sennrich
+reference (arXiv:1508.07909 §3.2 — get_stats + merge_vocab with the
+engine's deterministic tie-break), plus the downstream token-count
+contract, which encodes through the learned vocabulary join.
 """
 
 from __future__ import annotations
@@ -9,14 +9,9 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
-from data_mining_map_reduce_spark.operators.bpe import (
-    apply_merges,
-    bpe_learn,
-    bpe_token_counts,
-    bpe_word_counts,
-)
+from data_mining_map_reduce_spark.operators import bpe
+from data_mining_map_reduce_spark.operators.bpe import bpe_learn, bpe_token_counts
 
 _PUNCT = "([,.!?:;])"
 
@@ -101,21 +96,6 @@ def test_bpe_learn_matches_reference_sf0001(spark):
     assert got_vocab == ref_vocab
 
 
-def test_encode_matches_learned_vocab(spark):
-    """apply_merges (the composed-expression encoder) reproduces the
-    learner's final symbolization for every vocabulary word —
-    sequential rank-order application == priority-queue encode."""
-    docs = _toy_df(spark)
-    merges, words = bpe_learn(docs, n_merges=10)
-    pairs = [(l, r) for _, l, r, _ in merges]
-    fresh = bpe_word_counts(docs).select(
-        "w", apply_merges(F.col("syms"), pairs).alias("enc")
-    )
-    learned = {r.w: list(r.syms) for r in words.collect()}
-    encoded = {r.w: list(r.enc) for r in fresh.collect()}
-    assert encoded == learned
-
-
 def test_bpe_token_counts_contract(spark):
     """Per-doc counts: ws count == whitespace tokens; bpe count ==
     sum of per-word symbol counts; merges only ever shrink counts,
@@ -161,7 +141,7 @@ def test_bpe_local_distributed_parity(spark, monkeypatch):
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     m_local, w_local = bpe_learn(docs, n_merges=16)
-    monkeypatch.setenv("SPARK_GRAFT_BPE_LOCAL_WORDS", "0")
+    monkeypatch.setattr(bpe, "BPE_LOCAL_WORDS_CAP", 0)
     m_dist, w_dist = bpe_learn(docs, n_merges=16)
     assert m_local == m_dist
     vl = {r.w: (r.c, list(r.syms)) for r in w_local.collect()}

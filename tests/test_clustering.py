@@ -15,6 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from data_mining_map_reduce_spark.operators import clustering
 from data_mining_map_reduce_spark.operators.clustering import (
     bfr,
     kmeans,
@@ -208,7 +209,7 @@ def test_kmeans_driver_reduce_matches_groupby(spark, points, monkeypatch):
     a_dr, c_dr = kmeans(
         points, "vec", k=4, seed=7, local_elems_cap=0, stats_out=dr_stats
     )
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_REDUCE_PARTS", "0")
+    monkeypatch.setattr(clustering, "KMEANS_DRIVER_REDUCE_PARTS", 0)
     a_gb, c_gb = kmeans(
         points, "vec", k=4, seed=7, local_elems_cap=0, stats_out=gb_stats
     )
